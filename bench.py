@@ -410,10 +410,10 @@ def _variant_queries():
                 stage(bands, mode="table"),
             )
         cut, standing_labels, sets, bands = _clusters_standing_cache[sf_dir]
-        return neardup.neardup_clusters_delta(
+        return neardup.neardup_clusters_upsert(
             docs.where(F.col("doc_id") <= cut),
-            docs.where(F.col("doc_id") > cut),
             standing_labels,
+            docs.where(F.col("doc_id") > cut),
             standing_sets=sets,
             standing_bands=bands,
         )
@@ -455,8 +455,12 @@ def _variant_queries():
         deleted = docs.select("doc_id").where(
             F.col("doc_id") % neardup.RETRACT_MOD == 0
         )
-        return neardup.neardup_clusters_retract(
-            docs, deleted, labels, standing_sets=sets, standing_bands=bands
+        return neardup.neardup_clusters_upsert(
+            docs,
+            labels,
+            deleted_ids=deleted,
+            standing_sets=sets,
+            standing_bands=bands,
         )
 
     def leakage_split_retract_standing(spark, sf_dir):
@@ -526,12 +530,6 @@ def _variant_queries():
         # shingling ONLY the admitted batch texts.  The base
         # `curated_upsert` entry keeps the self-contained bootstrap
         # face that matches its full-rebuild driver oracle.
-        # (r15 note: threading a persisted _prefix_index table through
-        # `standing_prefix` — VERDICT r14 item 3 — was implemented,
-        # equivalence-pinned and MEASURED SLOWER here: 7.3 s without vs
-        # 8.5 s with at sf0.1/local[32]; the capability stays on
-        # curated_upsert for corpus-scale callers, this face keeps the
-        # cheaper in-call prefix derivation.)
         from pyspark.sql import functions as F
 
         from export_oltp_to_olap_spark.operators import neardup

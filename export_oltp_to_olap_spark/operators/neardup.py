@@ -469,7 +469,6 @@ def ngram_jaccard_pairs_touching(
     corpus_sets: DataFrame,
     delta_sets: DataFrame,
     threshold: float = 0.7,
-    corpus_prefix: DataFrame | None = None,
 ) -> DataFrame:
     """All pairs (doc_a < doc_b, jaccard ≥ t) with AT LEAST ONE endpoint
     in ``delta_sets``, in EITHER id direction — the CDC-upsert sibling
@@ -486,15 +485,6 @@ def ngram_jaccard_pairs_touching(
     join predicate only adds the mirrored candidates, which the
     least/greatest normalization + distinct collapse.  Scale is the
     delta probe's: Σ df(delta prefixes) join volume, never corpus².
-
-    ``corpus_prefix`` — PERSISTED :func:`_prefix_index` rows over
-    ``corpus_sets`` at the SAME threshold (optimization r15, VERDICT
-    r14 item 3: the prefix rows are per-document, so production
-    maintains them as one more rung of the standing index instead of
-    re-exploding + re-sorting every corpus doc's shingle array per
-    batch).  Prefix rows of a union are the union of prefix rows, so
-    the a-side is exactly ``corpus_prefix ∪ _prefix_index(delta)``;
-    value-identity with the in-call derivation is pinned by pytest.
     """
     t = F.lit(threshold)
     # The corpus side is consumed THREE times below (prefix index + both
@@ -502,16 +492,9 @@ def ngram_jaccard_pairs_touching(
     # re-key JOIN plan, not a table scan — materialize it once
     # (measured 3× ~1.2 s → one pass at sf0.1, optimization r14; the
     # same discipline as ngram_jaccard_pairs' persisted sets).
-    from export_oltp_to_olap_spark.operators.staging import stage_fanout
-
     sets_all = stage_fanout(corpus_sets.unionByName(delta_sets))
-    pref_delta = _prefix_index(delta_sets, threshold)
-    a = (
-        corpus_prefix.select("doc_id", "n_sh", "h").unionByName(pref_delta)
-        if corpus_prefix is not None
-        else _prefix_index(sets_all, threshold)
-    ).alias("a")
-    b = pref_delta.alias("b")
+    a = _prefix_index(sets_all, threshold).alias("a")
+    b = _prefix_index(delta_sets, threshold).alias("b")
     candidates = (
         a.join(
             b,
@@ -1523,7 +1506,10 @@ def neardup_clusters(
         raise RuntimeError(
             f"label propagation did not converge in {max_iterations} rounds"
         )
+    # The converged labels are staged, so neither edge cache is read again.
     edges.unpersist()
+    if not already_cached:
+        half.unpersist()
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         labels.join(sizes, "label")
@@ -1569,167 +1555,43 @@ FROM allc a JOIN csizes s USING (canonical_id)
 """
 
 
-def neardup_clusters_delta(
-    standing_docs: DataFrame,
-    new_docs: DataFrame,
-    standing_labels: DataFrame,
-    max_iterations: int = 25,
-    validate_contract: bool = False,
-    standing_sets: DataFrame | None = None,
-    standing_bands: DataFrame | None = None,
-) -> DataFrame:
-    """Incremental maintenance of the near-dup CLUSTER map for an
-    append-only delta batch — the operator that makes corpus dedup
-    maintainable at 100 TB: a nightly batch must not re-run connected
-    components over the whole corpus to absorb D ≪ C new documents.
-
-    Construction (quotient-graph label propagation):
-
-    1. Delta-touching pairs come from `minhash_lsh_neardup_delta` (the
-       persisted band-index probe — nothing re-pairs the standing
-       corpus against itself).
-    2. Each pair endpoint maps to its QUOTIENT node: a standing doc
-       collapses to its standing ``canonical_id``, a delta doc stands
-       for itself.  New edges can merge standing clusters only through
-       a delta bridge, so components over this quotient graph —
-       |standing clusters| + |delta| nodes, |delta pairs| edges —
-       decide every merge the full rebuild would make.
-    3. Min-label propagation over the quotient graph (the
-       `neardup_clusters` loop on a graph that is smaller by the mean
-       cluster size), then standing docs relabel THROUGH their old
-       canonical and sizes recount over the final map.
-
-    EXACTNESS (the oracle is the FULL-REBUILD recursive CTE, so the
-    driver hash-checks incremental ≡ rebuild directly).  CONTRACT on
-    ``standing_labels`` — the invariant the quotient argument actually
-    consumes (promoted from the upsert call site, ADVICE r13):
-
-    * ``canonical_id`` is the MIN member doc_id of its cluster (so the
-      min quotient-node id of any merged component IS the min doc id
-      of the merged cluster — the rebuild's canonical), and
-    * the map was produced under the same pair detector and threshold.
-
-    Every producer in this module satisfies the first clause by
-    construction: `neardup_clusters` labels with the component min, and
-    `neardup_clusters_retract` re-elects minima over survivors — which
-    is what lets `neardup_clusters_upsert` re-enter changed docs with
-    their OLD (non-monotone) ids.  Id-monotone appends (every delta id
-    above every standing id, the `source_novelty_delta` family
-    precondition) remain a SUFFICIENT condition for externally-supplied
-    maps, not a necessary one.  ``validate_contract=True`` asserts the
-    min-id clause with one aggregation over the standing map (a debug
-    job — leave off in production; the upsert property tests run it).
-
-    Steady-state cost: the delta pair probe + label propagation whose
-    rounds are bounded by the diameter of the DELTA-INDUCED quotient
-    subgraph (untouched clusters converge in round one).  Pass
-    ``standing_sets`` / ``standing_bands`` (:func:`neardup_standing_index`
-    output — VERDICT r13 item 5) and the probe consumes the persisted
-    shingle-set/band-index tables directly, so the batch never
-    re-shingles the standing corpus; left at ``None`` they derive from
-    ``standing_docs`` in-call (the oracle-fixture path).
-    """
-    lab = standing_labels.select("doc_id", "canonical_id")
-    if validate_contract:
-        bad = (
-            lab.groupBy("canonical_id")
-            .agg(F.min("doc_id").alias("mn"))
-            .where(F.col("canonical_id") != F.col("mn"))
-            .count()
+def check_cluster_min_canonicals(labels: DataFrame) -> None:
+    """Raise ``ValueError`` unless every ``canonical_id`` of the
+    ``(doc_id, canonical_id)`` map is the MIN member doc_id of its
+    cluster — the standing-map contract :func:`neardup_clusters_upsert`
+    consumes.  One aggregation over the map (a debug job: every
+    producer in this module satisfies it by construction)."""
+    bad = (
+        labels.groupBy("canonical_id")
+        .agg(F.min("doc_id").alias("mn"))
+        .where(F.col("canonical_id") != F.col("mn"))
+        .count()
+    )
+    if bad:
+        raise ValueError(
+            f"standing_labels violates the canonical-is-cluster-min "
+            f"contract for {bad} cluster(s)"
         )
-        if bad:
-            raise ValueError(
-                f"neardup_clusters_delta: standing_labels violates the "
-                f"canonical-is-cluster-min contract for {bad} cluster(s)"
-            )
-    pairs = minhash_lsh_neardup_delta(
-        standing_docs,
-        new_docs,
-        release_cache=True,
-        corpus_sets=standing_sets,
-        corpus_bands=standing_bands,
-    ).select("doc_a", "doc_b")
-    qa = lab.select(
-        F.col("doc_id").alias("doc_a"), F.col("canonical_id").alias("q_a")
-    )
-    qb = lab.select(
-        F.col("doc_id").alias("doc_b"), F.col("canonical_id").alias("q_b")
-    )
-    qedges = (
-        pairs.join(qa, "doc_a", "left")
-        .join(qb, "doc_b", "left")
-        .select(
-            F.coalesce("q_a", "doc_a").alias("doc_a"),
-            F.coalesce("q_b", "doc_b").alias("doc_b"),
-        )
-        .where(F.col("doc_a") != F.col("doc_b"))
-        .distinct()
-    )
-    qnodes = (
-        lab.select(F.col("canonical_id").alias("doc_id"))
-        .distinct()
-        .unionByName(new_docs.select("doc_id"))
-        .distinct()
-    )
-    # Stage the quotient edges once (optimization r15): the active-node
-    # union below references qedges twice and the propagation loop's
-    # edge build references it again — unstaged, the probe's candidate
-    # join + verify re-ran per reference.
-    qedges = stage_fanout(qedges)
-    # Propagate ONLY over the delta-ACTIVE quotient subgraph (nodes
-    # touching a new edge): every other quotient node is a singleton
-    # there and keeps its own id — at 100 TB the standing cluster
-    # population must never enter the iterative loop just to confirm
-    # nothing touched it.
-    active = (
-        qedges.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(qedges.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    active_labels = neardup_clusters(active, qedges, max_iterations).select(
-        "doc_id", F.col("canonical_id").alias("active_label")
-    )
-    qlabels = (
-        qnodes.join(active_labels, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("active_label", "doc_id").alias("new_label"),
-        )
-    )
-    standing_final = lab.join(
-        qlabels.withColumnRenamed("doc_id", "canonical_id"), "canonical_id"
-    ).select("doc_id", F.col("new_label").alias("canonical_id"))
-    delta_final = (
-        new_docs.select("doc_id")
-        .join(qlabels, "doc_id")
-        .select("doc_id", F.col("new_label").alias("canonical_id"))
-    )
-    final = standing_final.unionByName(delta_final)
-    sizes = final.groupBy("canonical_id").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return final.join(sizes, "canonical_id").select(
-        "doc_id", "canonical_id", "cluster_size"
-    )
 
 
 CLUSTERS_DELTA_CUT_FRACTION = 0.9
 
 
 def neardup_clusters_delta_fixture(docs: DataFrame) -> DataFrame:
-    """Fixture face: delta = ids above 90 % of max (the
-    `incremental_corpus_delta` convention); standing labels derive
-    in-call via the registered cluster build on the standing slice
-    (persisted between batches in production).  The merge is exact, so
-    the ORACLE is the full-rebuild recursive CTE — incremental ≡
-    rebuild hash-checked directly by the driver."""
+    """Fixture face of the APPEND batch: delta = ids above 90 % of max
+    (the `incremental_corpus_delta` convention) absorbed by
+    :func:`neardup_clusters_upsert` with no deletes; standing labels
+    derive in-call via the registered cluster build on the standing
+    slice (persisted between batches in production).  The merge is
+    exact, so the ORACLE is the full-rebuild recursive CTE —
+    incremental ≡ rebuild hash-checked directly against it."""
     cut = docs.agg(
         F.floor(F.lit(CLUSTERS_DELTA_CUT_FRACTION) * F.max("doc_id")).alias("cut")
     )
     standing = docs.join(F.broadcast(cut), F.col("doc_id") <= F.col("cut")).drop("cut")
     delta = docs.join(F.broadcast(cut), F.col("doc_id") > F.col("cut")).drop("cut")
-    return neardup_clusters_delta(
-        standing, delta, minhash_neardup_clusters(standing)
+    return neardup_clusters_upsert(
+        standing, minhash_neardup_clusters(standing), delta
     )
 
 
@@ -1758,129 +1620,24 @@ def _band_index_candidates(bands: DataFrame, band_r: int = MINHASH_BAND_R) -> Da
     )
 
 
-def neardup_clusters_retract(
-    standing_docs: DataFrame,
-    deleted_ids: DataFrame,
-    standing_labels: DataFrame,
-    max_iterations: int = 25,
-    standing_sets: DataFrame | None = None,
-    standing_bands: DataFrame | None = None,
-    standing_pairs: DataFrame | None = None,
-) -> DataFrame:
-    """Delete/tombstone maintenance of the near-dup CLUSTER map — the
-    quotient trick in reverse (VERDICT r12 item 3): remove a doc set
-    from the standing state by re-propagating ONLY the clusters that
-    contained a deleted doc.
-
-    Why only those clusters, and why that is EXACT (no id-monotonicity
-    precondition, unlike the append delta):
-
-    1. The standing map is the transitive closure of the pair
-       detector's edges over the standing corpus, so no edge ever
-       crosses two standing clusters — a cross-cluster pair would have
-       merged them.  Deleting docs removes edges, never adds them:
-       clusters WITHOUT a deleted member keep their exact membership,
-       canonical (their min id — which cannot be a deleted doc), and
-       size, so they pass through untouched.
-    2. The pair detector is per-pair deterministic and
-       corpus-independent (signatures/buckets derive from each doc's
-       own text), so the full rebuild's edges among survivors of an
-       affected cluster are exactly the detector's edges over those
-       survivors — re-running it restricted to |affected members|
-       docs reproduces the rebuild's subgraph.  Deleting a BRIDGE doc
-       splits its component; deleting a canonical re-elects the min
-       surviving id: both fall out of propagation over the restricted
-       subgraph.
-
-    Steady-state cost: O(|clusters touching the delete batch|) — the
-    detector re-pairs affected survivors only, and the standing
-    population never enters the iterative loop.  Pass ``standing_sets``
-    / ``standing_bands`` (:func:`neardup_standing_index` output — the
-    per-doc signatures / band index production already persists for
-    the APPEND path, VERDICT r13 item 5) and the re-pair becomes pure
-    joins over the persisted rows: nothing re-shingles or re-signs any
-    text (equivalence pinned by ``test_standing_signatures_equivalent``;
-    shingles and signatures are per-document, so filtering the
-    persisted rows to the affected survivors is exactly the in-call
-    derivation).  ``standing_pairs`` (optimization r15) goes one rung
-    further when the standing VERIFIED PAIR table is at hand: banding
-    and verification are both per-pair-deterministic, so the detector
-    over any subset S of the standing corpus equals the standing pair
-    set restricted to S×S (the `neardup_pairs_retract` anti-join ≡
-    re-detect claim, driver-hashed there) — the re-pair becomes two
-    joins of the persisted pairs against the affected survivors,
-    re-running nothing.  Left at ``None``, the fixture/bootstrap path
-    re-shingles the affected survivors from ``standing_docs``.
-
-    The oracle is the FULL-REBUILD recursive CTE over the surviving
-    corpus (``NEARDUP_CLUSTERS_RETRACT_SQL``), so the driver
-    hash-checks retract ≡ rebuild-after-delete directly — the
-    strongest form, matching `neardup_clusters_delta`'s convention.
-    """
-    lab = standing_labels.select("doc_id", "canonical_id", "cluster_size")
-    deleted = deleted_ids.select("doc_id").distinct()
-    # Clusters containing >= 1 deleted doc.  Bounded by the delete
-    # batch (|affected| <= |deleted|), so broadcast is the right shape
-    # at any corpus size — the standing map is probed, never shuffled.
-    affected = lab.join(deleted, "doc_id").select("canonical_id").distinct()
-    unaffected = lab.join(F.broadcast(affected), "canonical_id", "left_anti")
-    survivors = (
-        lab.join(F.broadcast(affected), "canonical_id")
-        .select("doc_id")
-        .join(deleted, "doc_id", "left_anti")
-    )
-    if standing_pairs is not None:
-        pairs = (
-            standing_pairs.join(
-                survivors.withColumnRenamed("doc_id", "doc_a"), "doc_a"
-            )
-            .join(survivors.withColumnRenamed("doc_id", "doc_b"), "doc_b")
-            .select("doc_a", "doc_b")
-        )
-        relabeled = neardup_clusters(survivors, pairs, max_iterations)
-    elif standing_sets is not None:
-        sets_surv = standing_sets.join(survivors, "doc_id")
-        bands_surv = (
-            standing_bands.join(survivors, "doc_id")
-            if standing_bands is not None
-            else _minhash_bands(sets_surv, MINHASH_N_HASHES, MINHASH_BAND_R)
-        )
-        pairs = _verify_jaccard(
-            _band_index_candidates(bands_surv), sets_surv, 0.8
-        )
-        relabeled = neardup_clusters(survivors, pairs, max_iterations)
-    else:
-        surviving_docs = standing_docs.join(survivors, "doc_id")
-        pairs = minhash_lsh_neardup(surviving_docs)
-        relabeled = neardup_clusters(
-            surviving_docs.select("doc_id"), pairs, max_iterations
-        )
-    return unaffected.select(
-        "doc_id", "canonical_id", "cluster_size"
-    ).unionByName(relabeled)
-
-
 RETRACT_MOD = 10
 
 
 def neardup_clusters_retract_fixture(docs: DataFrame) -> DataFrame:
-    """Fixture face: delete every RETRACT_MOD-th doc_id (hits cluster
-    canonicals, interiors and whole singleton clusters across the
-    fixture); standing labels derive in-call via the registered
-    cluster build (persisted between batches in production, exactly as
-    `neardup_clusters_delta_fixture` declares).  The in-call bootstrap
-    already computes the full standing PAIR table on the way to the
-    labels — thread it through ``standing_pairs`` so the retract's
-    re-pair is two joins of those rows instead of a second LSH pipeline
-    over the affected survivors (optimization r15; pairs over a subset
-    ≡ standing pairs restricted, the `neardup_pairs_retract` claim)."""
+    """Fixture face of the DELETE batch: every RETRACT_MOD-th doc_id is
+    deleted (hits cluster canonicals, interiors and whole singleton
+    clusters across the fixture) through :func:`neardup_clusters_upsert`
+    with no changed docs.  Standing labels derive in-call via the
+    registered cluster build (persisted between batches in production);
+    that build already computes the full standing PAIR table, so it is
+    threaded through as ``standing_pairs`` and the re-pair is two joins
+    of those rows instead of a second LSH pipeline over the affected
+    survivors."""
     deleted = docs.select("doc_id").where(F.col("doc_id") % RETRACT_MOD == 0)
-    from export_oltp_to_olap_spark.operators.staging import stage_fanout
-
     pairs = stage_fanout(minhash_lsh_neardup(docs).select("doc_a", "doc_b"))
     labels = neardup_clusters(docs, pairs)
-    return neardup_clusters_retract(
-        docs, deleted, labels, standing_pairs=pairs
+    return neardup_clusters_upsert(
+        docs, labels, deleted_ids=deleted, standing_pairs=pairs
     )
 
 
@@ -1941,119 +1698,169 @@ SELECT doc_a, doc_b, jaccard FROM pairs
 def neardup_clusters_upsert(
     standing_docs: DataFrame,
     standing_labels: DataFrame,
-    changed_docs: DataFrame,
-    deleted_ids: DataFrame,
+    changed_docs: DataFrame | None = None,
+    deleted_ids: DataFrame | None = None,
     max_iterations: int = 25,
     standing_sets: DataFrame | None = None,
     standing_bands: DataFrame | None = None,
+    standing_pairs: DataFrame | None = None,
 ) -> DataFrame:
-    """Full CDC maintenance of the dedup closure — UPSERTS + DELETES in
-    one batch: a changed document's text changes its shingles, so its
-    old version must leave the closure and its new version re-pair;
-    deletes ride along as pure retractions.
+    """CDC maintenance of the near-dup CLUSTER map — the one operator
+    for appends, re-written docs and deletes: a nightly batch must not
+    re-run connected components over the whole corpus to absorb
+    D ≪ C changes.  The batch form follows from which of
+    ``changed_docs`` / ``deleted_ids`` is given (at least one):
 
-    FUSED construction (round 14 — previously retract ∘ delta, two
-    iterative propagation loops; the profile showed the loops' fixed
-    job overhead, not re-shingling, dominated the steady-state cost, so
-    the two quotient graphs are now merged and propagation runs ONCE):
+    * APPEND — ``deleted_ids`` is ``None``: every ``changed_docs`` id is
+      NEW (absent from the standing map), so no standing cluster is
+      affected and nothing is re-paired; the probe alone adds edges.
+    * DELETE — ``changed_docs`` is ``None``: no probe is built, so the
+      surviving corpus is never shingled; only clusters containing a
+      deleted doc re-pair and re-propagate.
+    * MIXED — both: a changed doc (new text under an existing or a new
+      id) leaves its old cluster and re-pairs; deletes are pure
+      retractions.  Pass an empty ``deleted_ids`` frame for updates
+      without deletes.
+
+    Construction — one quotient graph, one propagation:
 
     1. Affected clusters = clusters containing a deleted or changed id
        (broadcast-bounded by the batch).  Unaffected clusters whose
        canonical never touches a new edge pass through with their
-       stored size — the retract discipline.
-    2. One quotient graph over three node kinds: unaffected cluster
-       CANONICALS (each stands for its intact cluster), affected
-       SURVIVORS (raw ids — their cluster must re-form anyway), and
-       CHANGED ids (new text).  Edges: the detector re-run restricted
-       to affected survivors (the retract edge set) plus the delta
-       probe of the changed docs' new text against the surviving
-       corpus, endpoints mapped to their quotient node.
-    3. Min-label propagation over the delta-ACTIVE subgraph only, then
-       unaffected members relabel THROUGH their canonical and sizes
-       recount over touched components only.
+       stored size.
+    2. Quotient nodes: unaffected cluster CANONICALS (each stands for
+       its intact cluster), affected SURVIVORS (raw ids — their cluster
+       must re-form anyway) and CHANGED ids (new text).  Edges: the
+       detector restricted to affected survivors, plus the delta probe
+       of the changed docs' new text against the surviving corpus,
+       endpoints mapped to their quotient node.  A delete batch's edges
+       never reach an unaffected cluster, so it propagates over the
+       affected survivors alone.
+    3. Min-label propagation over the batch-ACTIVE subgraph only (the
+       standing cluster population never enters the iterative loop),
+       then unaffected members relabel THROUGH their canonical and
+       sizes recount over touched components only.
 
-    EXACTNESS: every quotient node id is the min doc id of the member
-    set it stands for (an unaffected canonical is its cluster's min by
-    the standing contract; raw nodes stand for themselves), so the min
-    node id of a merged component IS the min member id — the rebuild's
-    canonical.  Edge completeness: survivor↔survivor pairs not
-    involving affected clusters cannot exist (they would have been
-    cross-cluster standing edges), so the affected re-pair + the
-    changed-doc probe cover exactly the rebuild's edge set that the
-    standing closure does not already encode.  The driver oracle (full
-    rebuild over the upserted corpus), the 3-batch/migration pytests
-    and the hypothesis chains verify the fusion directly.
+    EXACTNESS (the registered faces' oracles are full-rebuild recursive
+    CTEs, so the oracle tests hash-check incremental ≡ rebuild directly):
 
-    Caller contract: ``changed_docs`` carries the new text under the
-    SAME doc_id; ids also present in ``deleted_ids`` are treated as
-    deletes (the delete wins).
+    * Node labels: every quotient node id is the min doc id of the
+      member set it stands for — an unaffected canonical is its
+      cluster's min by the CONTRACT below, raw nodes stand for
+      themselves — so the min node id of a merged component IS the
+      min member id, the rebuild's canonical.  No id-monotonicity is
+      needed: changed and appended ids may sit anywhere.
+    * Edge completeness: the standing map is the transitive closure of
+      the detector's edges over the standing corpus, so no standing
+      edge crosses two clusters; deleting or re-writing a doc removes
+      only its own edges.  Survivor↔survivor edges outside affected
+      clusters are already encoded by the closure; inside them, the
+      detector is per-pair deterministic and corpus-independent
+      (signatures derive from each doc's own text), so re-running it
+      over the affected survivors reproduces the rebuild's subgraph —
+      a deleted bridge splits its component, a deleted canonical
+      re-elects the min survivor.  Every other new edge touches a
+      changed doc, which the probe covers.
 
-    ``standing_sets`` / ``standing_bands`` (:func:`neardup_standing_index`
-    output — VERDICT r13 item 5) thread the persisted signature tables
-    through both edge sources: the affected re-pair joins persisted
-    rows and the delta probe hits the persisted band index restricted
-    to survivors (doc_id anti-joins — shingles and signatures are
-    per-document).  The changed docs' NEW text is then the only thing
-    shingled: steady state pays O(|changed| + |deleted| + touched
-    clusters), never a corpus re-shingle.
+    CONTRACT on ``standing_labels``: ``canonical_id`` is the MIN member
+    doc_id of its cluster, and the map was produced under the same pair
+    detector and threshold.  `neardup_clusters` and this operator
+    produce such maps by construction; :func:`check_cluster_min_canonicals`
+    asserts the first clause for externally supplied maps.  Ids present
+    in both ``changed_docs`` and ``deleted_ids`` are deletes (the delete
+    wins).
+
+    Persisted inputs (the steady-state path; ``None`` derives from
+    ``standing_docs`` in-call, the oracle-fixture path):
+
+    * ``standing_sets`` / ``standing_bands`` (:func:`neardup_standing_index`
+      output) feed both edge sources: the affected re-pair joins
+      persisted rows and the probe hits the persisted band index
+      restricted to survivors (doc_id anti-joins — shingles and
+      signatures are per-document).  Only the changed docs' NEW text
+      is then shingled: O(|changed| + |deleted| + touched clusters).
+    * ``standing_pairs`` (the standing verified ``(doc_a, doc_b)``
+      table) replaces the affected re-pair outright: banding and
+      verification are per-pair deterministic, so the detector over
+      any subset S of the standing corpus equals the standing pair set
+      restricted to S×S (the `neardup_pairs_retract` anti-join ≡
+      re-detect claim).  It takes precedence over ``standing_sets``
+      for that edge source.
     """
-    deleted = deleted_ids.select("doc_id").distinct()
-    changed = changed_docs.join(deleted, "doc_id", "left_anti")
-    drop = deleted.unionByName(changed.select("doc_id")).distinct()
     lab = standing_labels.select("doc_id", "canonical_id", "cluster_size")
-    affected = lab.join(drop, "doc_id").select("canonical_id").distinct()
-    unaffected = lab.join(F.broadcast(affected), "canonical_id", "left_anti")
-    surviving_affected = (
-        lab.join(F.broadcast(affected), "canonical_id")
-        .select("doc_id")
-        .join(drop, "doc_id", "left_anti")
-    )
-    survivors = standing_docs.join(drop, "doc_id", "left_anti")
-
-    # Edge source 1: the detector restricted to affected survivors
-    # (the retract edge set) — persisted rows when supplied.
-    if standing_sets is not None:
-        sets_aff = standing_sets.join(surviving_affected, "doc_id")
-        bands_aff = (
-            standing_bands.join(surviving_affected, "doc_id")
-            if standing_bands is not None
-            else _minhash_bands(sets_aff, MINHASH_N_HASHES, MINHASH_BAND_R)
-        )
-        repair = _verify_jaccard(
-            _band_index_candidates(bands_aff), sets_aff, 0.8
-        )
+    changed = changed_docs
+    if deleted_ids is None:
+        # Append batch: no standing doc leaves, so no cluster is affected
+        # and the probe runs against the whole standing corpus.
+        drop = None
+        unaffected = lab
+        edges = None
+        raw_nodes = changed.select("doc_id")
     else:
-        repair = minhash_lsh_neardup(
-            standing_docs.join(surviving_affected, "doc_id")
+        deleted = deleted_ids.select("doc_id").distinct()
+        if changed is None:
+            drop = deleted
+        else:
+            changed = changed.join(deleted, "doc_id", "left_anti")
+            drop = deleted.unionByName(changed.select("doc_id")).distinct()
+        affected = lab.join(drop, "doc_id").select("canonical_id").distinct()
+        unaffected = lab.join(F.broadcast(affected), "canonical_id", "left_anti")
+        surviving_affected = (
+            lab.join(F.broadcast(affected), "canonical_id")
+            .select("doc_id")
+            .join(drop, "doc_id", "left_anti")
         )
+        # Edge source 1: the detector restricted to affected survivors —
+        # standing pairs or persisted rows when supplied.
+        if standing_pairs is not None:
+            repair = standing_pairs.join(
+                surviving_affected.withColumnRenamed("doc_id", "doc_a"), "doc_a"
+            ).join(surviving_affected.withColumnRenamed("doc_id", "doc_b"), "doc_b")
+        elif standing_sets is not None:
+            sets_aff = standing_sets.join(surviving_affected, "doc_id")
+            bands_aff = (
+                standing_bands.join(surviving_affected, "doc_id")
+                if standing_bands is not None
+                else _minhash_bands(sets_aff, MINHASH_N_HASHES, MINHASH_BAND_R)
+            )
+            repair = _verify_jaccard(
+                _band_index_candidates(bands_aff), sets_aff, 0.8
+            )
+        else:
+            repair = minhash_lsh_neardup(
+                standing_docs.join(surviving_affected, "doc_id")
+            )
+        edges = repair.select("doc_a", "doc_b")
+        if changed is None:
+            # Delete batch: no new edge reaches an unaffected cluster, so
+            # those pass through and the affected survivors re-form their
+            # components among themselves.
+            return unaffected.unionByName(
+                neardup_clusters(surviving_affected, edges, max_iterations)
+            )
+        raw_nodes = surviving_affected.unionByName(changed.select("doc_id"))
+
     # Edge source 2: the changed docs' NEW text probed against the
     # surviving corpus (band index anti-joined to survivors).
-    surv_sets = (
-        standing_sets.join(drop, "doc_id", "left_anti")
-        if standing_sets is not None
-        else None
-    )
-    surv_bands = (
-        standing_bands.join(drop, "doc_id", "left_anti")
-        if standing_bands is not None
-        else None
-    )
+    def surviving(table: DataFrame | None) -> DataFrame | None:
+        if table is None or drop is None:
+            return table
+        return table.join(drop, "doc_id", "left_anti")
+
     probe = minhash_lsh_neardup_delta(
-        survivors,
+        surviving(standing_docs),
         changed,
         release_cache=True,
-        corpus_sets=surv_sets,
-        corpus_bands=surv_bands,
-    )
-
+        corpus_sets=surviving(standing_sets),
+        corpus_bands=surviving(standing_bands),
+    ).select("doc_a", "doc_b")
     # Quotient mapping: unaffected members collapse to their canonical;
     # affected survivors and changed docs stand for themselves.
     m = unaffected.select("doc_id", F.col("canonical_id").alias("q"))
     qa = m.select(F.col("doc_id").alias("doc_a"), F.col("q").alias("q_a"))
     qb = m.select(F.col("doc_id").alias("doc_b"), F.col("q").alias("q_b"))
     qedges = (
-        repair.select("doc_a", "doc_b")
-        .unionByName(probe.select("doc_a", "doc_b"))
+        (probe if edges is None else edges.unionByName(probe))
         .join(qa, "doc_a", "left")
         .join(qb, "doc_b", "left")
         .select(
@@ -2063,9 +1870,8 @@ def neardup_clusters_upsert(
         .where(F.col("doc_a") != F.col("doc_b"))
         .distinct()
     )
-    # Staged once for the same reason as the delta path: the active
-    # union + the loop's edge build would otherwise re-run the repair
-    # and probe joins per reference (optimization r15).
+    # Staged once: the active union and the loop's edge build would
+    # otherwise re-run the repair and probe joins per reference.
     qedges = stage_fanout(qedges)
     active = (
         qedges.select(F.col("doc_a").alias("doc_id"))
@@ -2075,29 +1881,31 @@ def neardup_clusters_upsert(
     active_labels = neardup_clusters(active, qedges, max_iterations).select(
         F.col("doc_id").alias("q"), F.col("canonical_id").alias("nl")
     )
+    # The converged labels are staged, so nothing downstream reads qedges.
+    qedges.unpersist()
 
     # Untouched unaffected clusters (canonical never met a new edge)
     # pass through with their stored size; everything else recounts
     # over touched components only — both sides batch-bounded beyond
     # the one relabel join through the standing map.
-    relabeled_unaff = unaffected.join(active_labels, unaffected.canonical_id == active_labels.q, "left")
-    untouched = relabeled_unaff.where(F.col("nl").isNull()).select(
+    relabeled = unaffected.join(
+        active_labels, unaffected.canonical_id == active_labels.q, "left"
+    )
+    untouched = relabeled.where(F.col("nl").isNull()).select(
         "doc_id", "canonical_id", "cluster_size"
     )
-    touched_unaff = relabeled_unaff.where(F.col("nl").isNotNull()).select(
-        "doc_id", F.col("nl").alias("canonical_id")
-    )
-    raw_nodes = surviving_affected.unionByName(changed.select("doc_id"))
-    touched_raw = (
-        raw_nodes.join(
-            active_labels, raw_nodes.doc_id == active_labels.q, "left"
+    touched = (
+        relabeled.where(F.col("nl").isNotNull())
+        .select("doc_id", F.col("nl").alias("canonical_id"))
+        .unionByName(
+            raw_nodes.join(
+                active_labels, raw_nodes.doc_id == active_labels.q, "left"
+            ).select(
+                raw_nodes.doc_id,
+                F.coalesce("nl", raw_nodes.doc_id).alias("canonical_id"),
+            )
         )
-        .select(
-            raw_nodes.doc_id,
-            F.coalesce("nl", raw_nodes.doc_id).alias("canonical_id"),
-        )
     )
-    touched = touched_unaff.unionByName(touched_raw)
     sizes = touched.groupBy("canonical_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )

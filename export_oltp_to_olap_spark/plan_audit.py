@@ -143,7 +143,7 @@ SMJ_EXPECTED = frozenset(
         # and the both-directions prefix probe — same corpus-derived
         # text/doc_id-keyed frames:
         "curated_upsert",
-        # inherits neardup_clusters_retract's propagation/pass-through
+        # inherits the delete-only cluster upsert's propagation/pass-through
         # chain plus the split re-hash over the relabeled map:
         "leakage_split_retract",
         # inherits the propagation chain, plus the per-doc quality

@@ -1121,7 +1121,6 @@ def curated_upsert(
     standing_losers: DataFrame,
     standing_pairs: DataFrame,
     standing_sets: DataFrame | None = None,
-    standing_prefix: DataFrame | None = None,
 ) -> DataFrame:
     """Full CDC maintenance of the standing CURATED corpus — UPSERTS +
     DELETES in one batch, ≡ ``curated_corpus((documents − deleted −
@@ -1162,12 +1161,7 @@ def curated_upsert(
     the two same-text successor maps, so steady state shingles only the
     admitted batch texts — never the corpus (the VERDICT r13 item-5
     discipline).  ``None`` (fixture/bootstrap) shingles the stage
-    in-call.  ``standing_prefix`` (optimization r15, VERDICT r14
-    item 3) additionally threads the persisted AllPairs prefix-row
-    table (``_prefix_index`` over ``standing_sets`` at the same
-    threshold): prefix rows are per-document, so they re-key through
-    the same successor maps and the probe skips re-exploding +
-    re-sorting every corpus doc's shingle array per batch.
+    in-call.
 
     Caller contract: ``changed_docs`` carries the new text under the
     SAME doc_id (or a brand-new id — inserts ride the same path); ids
@@ -1183,7 +1177,6 @@ def curated_upsert(
         standing_losers,
         standing_pairs,
         standing_sets,
-        standing_prefix,
     )
     return (
         assign_splits(kept, "doc_id")
@@ -1199,7 +1192,6 @@ def _curated_upsert_state(
     standing_losers: DataFrame,
     standing_pairs: DataFrame,
     standing_sets: DataFrame | None = None,
-    standing_prefix: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
     """:func:`curated_upsert`'s construction, returning the full
     POST-BATCH LEDGER alongside the kept rows so batches can chain
@@ -1299,44 +1291,22 @@ def _curated_upsert_state(
             succ_r["doc_id"], F.coalesce("succ2", succ_r["succ"]).alias("succ")
         )
         m = succ_r2.unionByName(succ_c)
-
-        def _rekey(table: DataFrame, payload: list[str]) -> DataFrame:
-            # Same-text succession re-key + restriction to the
-            # post-challenge stage — shared by the per-doc set rows and
-            # (optimization r15) the per-doc prefix rows, which carry
-            # only text-derived payloads and therefore re-key the same
-            # way.
-            return (
-                table.join(F.broadcast(m), "doc_id", "left")
-                .select(
-                    F.coalesce("succ", F.col("doc_id")).alias("doc_id"),
-                    *payload,
-                )
-                .join(stage_old.select("doc_id"), "doc_id")
-            )
-
-        corpus_sets = _rekey(standing_sets, ["shs", "n_sh"])
-        # The prefix re-key deliberately SKIPS the stage_old
-        # restriction: a prefix row for a dead/demoted id can only
-        # produce candidates the verify join (inner on sets_all, which
-        # IS restricted) then drops, so the output is identical — and
-        # the restriction would re-evaluate the unstaged challenge
-        # chain a third time per run.
-        corpus_prefix = (
-            standing_prefix.join(F.broadcast(m), "doc_id", "left").select(
+        # Same-text succession re-key, restricted to the post-challenge
+        # stage.
+        corpus_sets = (
+            standing_sets.join(F.broadcast(m), "doc_id", "left")
+            .select(
                 F.coalesce("succ", F.col("doc_id")).alias("doc_id"),
+                "shs",
                 "n_sh",
-                "h",
             )
-            if standing_prefix is not None
-            else None
+            .join(stage_old.select("doc_id"), "doc_id")
         )
     else:
         corpus_sets = ngram_shingle_sets(stage_old.select("doc_id", "text"))
-        corpus_prefix = None
     delta_sets = ngram_shingle_sets(admitted.select("doc_id", "text"))
     new_pairs = ngram_jaccard_pairs_touching(
-        corpus_sets, delta_sets, NEARDUP_THRESHOLD, corpus_prefix=corpus_prefix
+        corpus_sets, delta_sets, NEARDUP_THRESHOLD
     )
 
     pairs_new = pairs_old.unionByName(new_pairs)

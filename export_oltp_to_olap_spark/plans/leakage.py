@@ -36,7 +36,7 @@ from export_oltp_to_olap_spark.operators.neardup import (
     minhash_lsh_neardup,
     minhash_neardup_clusters,
     neardup_clusters,
-    neardup_clusters_retract,
+    neardup_clusters_upsert,
 )
 from export_oltp_to_olap_spark.operators.sampling import assign_splits
 from export_oltp_to_olap_spark.operators.staging import stage_fanout
@@ -217,22 +217,22 @@ def leakage_safe_split_retract(
     """Per-doc cluster-keyed split map after a delete batch:
     ``(doc_id, canonical_id, split)`` over the survivors, canonical and
     split recomputed ONLY inside delete-affected components
-    (`neardup_clusters_retract` does the scoped re-pair/re-election;
-    the split is a map-side hash of the resulting canonical).  The
-    registered face derives its standing cluster map in-call and
-    tombstones every SPLIT_RETRACT_MOD-th doc_id; the ORACLE is the
-    full cluster + split SQL over the surviving corpus — retract ≡
-    rebuild-after-delete, driver-hashed.
+    (`neardup_clusters_upsert` with no changed docs does the scoped
+    re-pair/re-election; the split is a map-side hash of the resulting
+    canonical).  The registered face derives its standing cluster map
+    in-call and tombstones every SPLIT_RETRACT_MOD-th doc_id; the
+    ORACLE is the full cluster + split SQL over the surviving corpus —
+    retract ≡ rebuild-after-delete, hash-checked.
 
-    In-call bootstrap (optimization r15): the standing-label build
-    already computes the full verified pair table, so it is staged once
-    and threaded into the retract as ``standing_pairs`` — the scoped
-    re-pair becomes two joins of those rows instead of a second LSH
-    pipeline (shingle→sign→band→verify) over the affected survivors.
-    Steady state instead passes the persisted ``standing_labels`` +
+    In-call bootstrap: the standing-label build already computes the
+    full verified pair table, so it is staged once and threaded into
+    the upsert as ``standing_pairs`` — the scoped re-pair becomes two
+    joins of those rows instead of a second LSH pipeline
+    (shingle→sign→band→verify) over the affected survivors.  Steady
+    state instead passes the persisted ``standing_labels`` +
     ``standing_sets``/``standing_bands`` (`neardup_standing_index`
-    rows, the clusters-retract [standing] convention) and the timed
-    plan is the affected-scope joins + re-propagation only.
+    rows) and the timed plan is the affected-scope joins +
+    re-propagation only.
     """
     if deleted_ids is None:
         deleted_ids = documents.select("doc_id").where(
@@ -244,10 +244,10 @@ def leakage_safe_split_retract(
             minhash_lsh_neardup(documents).select("doc_a", "doc_b")
         )
         standing_labels = neardup_clusters(documents, standing_pairs)
-    relabeled = neardup_clusters_retract(
+    relabeled = neardup_clusters_upsert(
         documents,
-        deleted_ids,
         standing_labels,
+        deleted_ids=deleted_ids,
         standing_sets=standing_sets,
         standing_bands=standing_bands,
         standing_pairs=standing_pairs,

@@ -1617,12 +1617,12 @@ def q_cosine_lsh_recall_audit(spark: SparkSession, sf_dir: str):
 
 @register("neardup_clusters_delta", neardup.NEARDUP_CLUSTERS_SQL)
 def q_neardup_clusters_delta(spark: SparkSession, sf_dir: str):
-    """Incremental near-dup CLUSTER maintenance: quotient-graph label
-    propagation absorbs a delta batch into the standing cluster map
-    (merges decided over |standing clusters| + |delta| nodes, never the
-    corpus).  The oracle is the FULL-REBUILD recursive CTE — the driver
-    hash-checks incremental ≡ rebuild directly (the strongest delta
-    statement, applied to the dedup closure itself)."""
+    """Incremental near-dup CLUSTER maintenance, append batch: the
+    cluster upsert absorbs new docs into the standing cluster map by
+    quotient-graph label propagation (merges decided over |standing
+    clusters| + |delta| nodes, never the corpus).  The oracle is the
+    FULL-REBUILD recursive CTE — the oracle hash-checks incremental ≡
+    rebuild directly."""
     return neardup.neardup_clusters_delta_fixture(_docs(spark, sf_dir))
 
 
@@ -1677,13 +1677,13 @@ def q_cosine_lsh_multiprobe_recall_audit(spark: SparkSession, sf_dir: str):
 
 @register("neardup_clusters_retract", neardup.NEARDUP_CLUSTERS_RETRACT_SQL)
 def q_neardup_clusters_retract(spark: SparkSession, sf_dir: str):
-    """Delete/tombstone maintenance of the dedup cluster map (VERDICT
-    r12 item 3): the quotient trick in reverse — only clusters
-    containing a deleted doc re-pair and re-propagate (bridge deletes
-    split, canonical deletes re-elect the min survivor), every other
-    cluster passes through untouched.  Exact with NO id-monotonicity
-    precondition; the oracle is the FULL-REBUILD recursive CTE over
-    the surviving corpus, so the driver hash-checks retract ≡
+    """Incremental near-dup CLUSTER maintenance, delete batch: the
+    cluster upsert with no changed docs — only clusters containing a
+    deleted doc re-pair and re-propagate (bridge deletes split,
+    canonical deletes re-elect the min survivor), every other cluster
+    passes through untouched.  Exact with NO id-monotonicity
+    precondition; the oracle is the FULL-REBUILD recursive CTE over the
+    surviving corpus, so the oracle hash-checks retract ≡
     rebuild-after-delete directly."""
     return neardup.neardup_clusters_retract_fixture(_docs(spark, sf_dir))
 
@@ -1737,12 +1737,12 @@ def q_lsh_multiprobe_cosine_neardup(spark: SparkSession, sf_dir: str):
 
 @register("neardup_clusters_upsert", neardup.NEARDUP_CLUSTERS_UPSERT_SQL)
 def q_neardup_clusters_upsert(spark: SparkSession, sf_dir: str):
-    """Full CDC maintenance of the dedup closure — upserts + deletes in
-    one batch: retract the old versions (affected clusters
-    split/re-canonicalize), then delta-absorb the changed docs' new
-    text (band probe + quotient propagation).  Oracle = the full
-    rebuild over the upserted corpus, so the driver hash-checks the
-    whole composition directly."""
+    """Incremental near-dup CLUSTER maintenance, mixed CDC batch —
+    upserts + deletes in one quotient propagation: the old versions
+    leave their clusters (affected clusters split/re-canonicalize) and
+    the changed docs' new text re-pairs through the band probe.
+    Oracle = the full rebuild over the upserted corpus, so the oracle
+    hash-checks the whole batch directly."""
     return neardup.neardup_clusters_upsert_fixture(_docs(spark, sf_dir))
 
 

@@ -16,9 +16,20 @@ SF001 = "/root/testdata/sf0.01"
 SF01 = "/root/testdata/sf0.1"
 
 
+# The session default heap (16g) is sized for a benchmark host; the
+# fixtures are at most sf0.1 (17 MB), and an unbounded heap leaves no
+# room for the DuckDB oracles and Python workers on a 16 GB machine.
+TEST_DRIVER_MEMORY = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "6g")
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(
+        app_name="tests",
+        master="local[8]",
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": TEST_DRIVER_MEMORY},
+    )
     yield s
     s.stop()
 

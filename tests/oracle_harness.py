@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 import os
+import tempfile
 
 import duckdb
 
@@ -28,8 +29,20 @@ FIXTURE_TABLES = (
 )
 
 
+# DuckDB sizes itself to 80% of host RAM by default, while the Spark JVM
+# and its Python workers share the same host during a test run.  The
+# brute-force recall-audit oracles peak near 7 GB unbounded; under this
+# cap they spill to disk instead and return the same rows.
+ORACLE_MEMORY_LIMIT = "3GB"
+
+
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    con = duckdb.connect(
+        config={
+            "memory_limit": ORACLE_MEMORY_LIMIT,
+            "temp_directory": os.path.join(tempfile.gettempdir(), "duckdb_oracle"),
+        }
+    )
     for name in FIXTURE_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):

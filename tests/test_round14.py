@@ -1,13 +1,12 @@
 """Round-14 contracts.
 
-VERDICT r13 item 5: the steady-state delete/upsert maintenance faces
-must time their DECLARED plan — the persisted shingle-set/band-index
-tables (`neardup_standing_index`) threaded through the retract and
-delta legs so nothing re-shingles the surviving corpus.  The tests pin
-the load-bearing claim: persisted-artifact path ≡ in-call bootstrap
-path ≡ (by the driver oracle) the full rebuild, plus the
-`_band_index_candidates` / `_minhash_band_candidates` lockstep and the
-promoted `neardup_clusters_delta` contract (ADVICE r13).
+The persisted-index candidate stage (`_band_index_candidates`) in
+lockstep with its in-plan sibling, the raw-corpus independence of the
+persisted MinHash delta probe, the cluster-map upsert's three edge
+sources on one mixed batch (in-call ≡ persisted sets ≡ standing
+pairs), and the curated retract/upsert and standing-ledger pins.  The
+other cluster-map maintenance pins live in
+tests/test_neardup_clusters.py.
 """
 
 from __future__ import annotations
@@ -16,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from export_oltp_to_olap_spark.operators import neardup
+from export_oltp_to_olap_spark.operators.staging import stage_fanout
 from export_oltp_to_olap_spark.sources.parquet import load_tables
 
 
@@ -45,63 +45,6 @@ def test_band_index_candidates_equivalent(spark, sf001):
     assert got == want and want
 
 
-def test_retract_standing_signatures_equivalent(spark, sf001):
-    """retract(persisted sets+bands) ≡ retract(in-call re-shingle) —
-    with the in-call form already driver-hashed against the full
-    rebuild over survivors, the persisted path inherits the rebuild
-    equivalence transitively."""
-    docs = _docs(spark, sf001)
-    deleted = docs.select("doc_id").where(
-        F.col("doc_id") % neardup.RETRACT_MOD == 0
-    )
-    labels = neardup.minhash_neardup_clusters(docs).localCheckpoint()
-    sets, bands = neardup.neardup_standing_index(docs)
-    in_call = _rows(neardup.neardup_clusters_retract(docs, deleted, labels))
-    persisted = _rows(
-        neardup.neardup_clusters_retract(
-            docs, deleted, labels, standing_sets=sets, standing_bands=bands
-        )
-    )
-    sets_only = _rows(
-        neardup.neardup_clusters_retract(
-            docs, deleted, labels, standing_sets=sets
-        )
-    )
-    assert persisted == in_call and in_call
-    assert sets_only == in_call
-
-
-def test_delta_standing_signatures_equivalent(spark, sf001):
-    """delta(persisted sets+bands) ≡ delta(in-call) — and the promoted
-    contract check (`validate_contract=True`) accepts the map
-    `neardup_clusters` produced."""
-    docs = _docs(spark, sf001)
-    cut = docs.agg(
-        F.floor(
-            F.lit(neardup.CLUSTERS_DELTA_CUT_FRACTION) * F.max("doc_id")
-        ).alias("c")
-    ).first()["c"]
-    standing = docs.where(F.col("doc_id") <= cut)
-    delta = docs.where(F.col("doc_id") > cut)
-    labels = neardup.minhash_neardup_clusters(standing).localCheckpoint()
-    sets, bands = neardup.neardup_standing_index(standing)
-    in_call = _rows(
-        neardup.neardup_clusters_delta(
-            standing, delta, labels, validate_contract=True
-        )
-    )
-    persisted = _rows(
-        neardup.neardup_clusters_delta(
-            standing,
-            delta,
-            labels,
-            standing_sets=sets,
-            standing_bands=bands,
-        )
-    )
-    assert persisted == in_call and in_call
-
-
 def test_delta_structural_independence_of_raw_corpus(spark, sf001):
     """With both persisted tables supplied, the pair probe provably
     never reads the raw standing corpus: corpus=None works (the
@@ -122,9 +65,13 @@ def test_delta_structural_independence_of_raw_corpus(spark, sf001):
 
 
 def test_upsert_standing_signatures_equivalent(spark, sf001):
-    """upsert(persisted sets+bands) ≡ upsert(in-call) — the composition
-    whose [standing] bench variant now times the declared plan: only
-    the changed docs' NEW text is shingled in the persisted path."""
+    """Mixed delete + change batch: upsert(in-call) ≡ upsert(persisted
+    sets+bands) ≡ upsert(standing pairs).  The persisted path shingles
+    only the changed docs' NEW text; the standing-pairs path replaces
+    the affected re-pair with two joins of the standing pair table
+    (banding and verification are per-pair deterministic, so the
+    detector over the affected survivors equals the standing pairs
+    restricted to them)."""
     docs = _docs(spark, sf001)
     deleted = docs.select("doc_id").where(
         F.col("doc_id") % neardup.UPSERT_DEL_MOD == 0
@@ -133,7 +80,10 @@ def test_upsert_standing_signatures_equivalent(spark, sf001):
         (F.col("doc_id") % neardup.UPSERT_CHG_MOD == 0)
         & (F.col("doc_id") % neardup.UPSERT_DEL_MOD != 0)
     ).withColumn("text", F.concat(F.col("text"), F.lit(neardup.UPSERT_SUFFIX)))
-    labels = neardup.minhash_neardup_clusters(docs).localCheckpoint()
+    pairs = stage_fanout(
+        neardup.minhash_lsh_neardup(docs).select("doc_a", "doc_b")
+    )
+    labels = neardup.neardup_clusters(docs, pairs).localCheckpoint()
     sets, bands = neardup.neardup_standing_index(docs)
     in_call = _rows(
         neardup.neardup_clusters_upsert(docs, labels, changed, deleted)
@@ -148,24 +98,13 @@ def test_upsert_standing_signatures_equivalent(spark, sf001):
             standing_bands=bands,
         )
     )
-    assert persisted == in_call and in_call
-
-
-def test_delta_validate_contract_rejects_non_min_canonicals(spark, sf0001):
-    """The promoted contract (ADVICE r13): a standing map whose
-    canonical is not its cluster's min id must be rejected up front
-    when validation is requested, instead of silently mis-merging."""
-    docs = _docs(spark, sf0001)
-    delta = docs.where(F.col("doc_id") % 10 == 7)
-    standing = docs.where(F.col("doc_id") % 10 != 7)
-    labels = neardup.minhash_neardup_clusters(standing)
-    # Corrupt the map: shift every canonical off its cluster's min id
-    # (works even when the fixture's clusters are all singletons).
-    bad = labels.withColumn("canonical_id", F.col("canonical_id") + 1)
-    with pytest.raises(ValueError, match="cluster-min contract"):
-        neardup.neardup_clusters_delta(
-            standing, delta, bad, validate_contract=True
+    via_pairs = _rows(
+        neardup.neardup_clusters_upsert(
+            docs, labels, changed, deleted, standing_pairs=pairs
         )
+    )
+    assert persisted == in_call and in_call
+    assert via_pairs == in_call
 
 
 # ---------------------------------------------------------------------------
